@@ -22,7 +22,14 @@ from pyspark.sql import functions as F
 
 from ma_anonymization_etl_spark.operators.session_cache import cache_put, register_cache
 from ma_anonymization_etl_spark.registry import register
-from ma_anonymization_etl_spark.sources.io import load, spread_small_scan
+from ma_anonymization_etl_spark.sources.io import (
+    MAX_PASSES,
+    disk_budget,
+    load,
+    multipass_parquet,
+    passes_for_budget,
+    spread_small_scan,
+)
 
 # ---------------------------------------------------------------------------
 # Shared text expressions
@@ -43,22 +50,6 @@ def word_shingles(col: str = "text", n: int = 3) -> Column:
             lambda i: F.concat_ws(" ", F.slice(w, i, n)),
         )
     )
-
-
-def hash64(col: Column) -> Column:
-    """Engine-portable 60-bit integer hash: md5 hex prefix → BIGINT.
-    (xxhash64/hash are engine-specific — never in checked output.)"""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def hash31_fast(col: Column) -> Column:
-    """xxhash64-based 31-bit hash — the PRODUCTION alternative to
-    hash31_md5 (codegen-friendly, no md5 + hex-parse cost) for
-    deployments that do not need the DuckDB oracle replay.  Not used by
-    any registered query: the oracle-checked MinHash core deliberately
-    uses hash31_md5, and swapping this in there would break the
-    structural j3/j23/k10 oracles (they replay the md5 hashes)."""
-    return F.pmod(F.xxhash64(col), F.lit(_MERSENNE))
 
 
 def hash31_md5(col: Column) -> Column:
@@ -2552,15 +2543,18 @@ def j56_maximal_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _char_occ(
-    docs: DataFrame, cgram: int, id_col: str, text_col: str
+    docs: DataFrame, cgram: int, id_col: str, text_col: str, hashed: bool = False
 ) -> DataFrame:
     """Positional character-window occurrences (doc_id, n_chars, pos,
     gr) — the shared front of the single-pass and multipass ExactSubstr
-    engines, so the two forms cannot drift on window generation."""
+    engines, so the two forms cannot drift on window generation.
+    ``hashed`` replaces ``gr`` with the composite 96-bit key (g1, g2)
+    BEFORE the gram shuffle (collision bound in
+    ``maximal_dup_spans_chars``)."""
     base = docs.select(
         F.col(id_col).alias("doc_id"), F.lower(F.col(text_col)).alias("text")
     ).withColumn("n_chars", F.length("text"))
-    return base.select(
+    occ = base.select(
         "doc_id",
         "n_chars",
         F.explode(
@@ -2575,6 +2569,30 @@ def _char_occ(
             )
         ).alias("o"),
     ).select("doc_id", "n_chars", F.col("o.pos").alias("pos"), F.col("o.gr").alias("gr"))
+    if not hashed:
+        return occ
+    return occ.select(
+        "doc_id",
+        "n_chars",
+        "pos",
+        F.xxhash64("gr").alias("g1"),
+        # crc32 yields unsigned 32-bit as BIGINT; shift into the
+        # signed int range (bijective) so the key slot is 4 bytes.
+        (F.crc32("gr") - F.lit(2**31)).cast("int").alias("g2"),
+    )
+
+
+def _window_covered(occ: DataFrame, gkey: list[str]) -> DataFrame:
+    """Covered window starts (doc_id, n_chars, pos): occurrences whose
+    gram key occurs >= 2 times, counted by ONE gram-partitioned window
+    (no join-back) — shared by both ExactSubstr engines."""
+    from pyspark.sql import Window
+
+    return (
+        occ.withColumn("cnt", F.count(F.lit(1)).over(Window.partitionBy(*gkey)))
+        .filter(F.col("cnt") >= 2)
+        .select("doc_id", "n_chars", "pos")
+    )
 
 
 def _spans_from_covered(
@@ -2691,22 +2709,8 @@ def maximal_dup_spans_chars(
     by doc; nothing is all-pairs, nothing global."""
     from pyspark.sql import Window
 
-    occ = _char_occ(docs, cgram, id_col, text_col)
-    if hashed_keys:
-        # Composite 96-bit key replaces the cgram-char string BEFORE
-        # the gram shuffle — collision bound in the docstring.
-        occ = occ.select(
-            "doc_id",
-            "n_chars",
-            "pos",
-            F.xxhash64("gr").alias("g1"),
-            # crc32 yields unsigned 32-bit as BIGINT; shift into the
-            # signed int range (bijective) so the key slot is 4 bytes.
-            (F.crc32("gr") - F.lit(2**31)).cast("int").alias("g2"),
-        )
-        gkey = ["g1", "g2"]
-    else:
-        gkey = ["gr"]
+    occ = _char_occ(docs, cgram, id_col, text_col, hashed=hashed_keys)
+    gkey = ["g1", "g2"] if hashed_keys else ["gr"]
     if skew_salt > 0:
         occ_s = occ.withColumn(
             "sb", F.pmod(F.xxhash64("doc_id", "pos"), F.lit(skew_salt))
@@ -2736,13 +2740,7 @@ def maximal_dup_spans_chars(
             "doc_id", "n_chars", "pos"
         )
     else:
-        covered = (
-            occ.withColumn(
-                "cnt", F.count(F.lit(1)).over(Window.partitionBy(*gkey))
-            )
-            .filter(F.col("cnt") >= 2)
-            .select("doc_id", "n_chars", "pos")
-        )
+        covered = _window_covered(occ, gkey)
     return _spans_from_covered(covered, cgram, min_span)
 
 
@@ -2759,9 +2757,7 @@ _J56D_COV_PARQ_B = 14  # bytes per covered row in the accumulated
 #                        parquet, at the covered==occ worst case — this
 #                        floor is IRREDUCIBLE by P (all covered rows
 #                        must exist before the island stage)
-_J56D_MAX_PASSES = 64  # past this, scan-pass cost dominates any
-#                        footprint win; a budget that derives more is
-#                        effectively too small for the corpus
+_J56D_MAX_PASSES = MAX_PASSES  # the shared sources.io cap
 
 
 def derive_dup_span_passes(
@@ -2778,7 +2774,8 @@ def derive_dup_span_passes(
     occ_rows * _J56D_OCC_SHUF_B / P  +  occ_rows * _J56D_COV_PARQ_B,
     where occ_rows = sum(greatest(n_chars - cgram + 1, 1)) — the exact
     window count ``_char_occ`` explodes.  Solving for the smallest P
-    that fits the budget:  P = ceil(occ_shuf / (budget - cov_floor)).
+    that fits the budget:  P = ceil(occ_shuf / (budget - cov_floor))
+    — ``sources.io.passes_for_budget``, the formula j9d shares.
 
     The covered-parquet floor is irreducible by P, so a budget below
     it raises ``ValueError`` naming the floor — no pass count can make
@@ -2786,8 +2783,6 @@ def derive_dup_span_passes(
     way the first sf100 attempt did (BASELINE round 12).  The one
     corpus-stats aggregate collects a single scalar (driver-side
     bounded, the repo-wide discipline)."""
-    import math
-
     occ_rows = (
         docs.agg(
             F.sum(
@@ -2801,17 +2796,11 @@ def derive_dup_span_passes(
     )
     if occ_rows == 0:
         return 1
-    cov_floor = occ_rows * _J56D_COV_PARQ_B
-    headroom = disk_budget_bytes - cov_floor
-    if headroom <= 0:
-        raise ValueError(
-            f"disk budget {disk_budget_bytes} B is below the "
-            f"irreducible covered-parquet floor ~{cov_floor} B for "
-            f"{occ_rows} windows; no pass count fits — raise the "
-            "budget or shrink the corpus"
-        )
-    p = math.ceil(occ_rows * _J56D_OCC_SHUF_B / headroom)
-    return max(1, min(p, _J56D_MAX_PASSES))
+    return passes_for_budget(
+        occ_rows * _J56D_OCC_SHUF_B,
+        disk_budget_bytes,
+        floor_bytes=occ_rows * _J56D_COV_PARQ_B,
+    )
 
 
 def maximal_dup_spans_chars_multipass(
@@ -2821,7 +2810,6 @@ def maximal_dup_spans_chars_multipass(
     id_col: str = "doc_id",
     text_col: str = "text",
     passes: int | str = 4,
-    scratch: str | None = None,
     disk_budget_bytes: int | None = None,
 ) -> DataFrame:
     """The ExactSubstr span inventory with BOUNDED PEAK SHUFFLE
@@ -2841,38 +2829,33 @@ def maximal_dup_spans_chars_multipass(
     (``_spans_from_covered``) then sees identical input
     (property-pinned at several pass counts).
 
-    Peak footprint: each pass is its OWN JOB — its covered positions
-    land in session-scoped parquet, and a ContextCleaner nudge
-    releases the pass's shuffle files before the next pass starts —
-    so peak disk ≈ one range's shuffle (~1/passes of the total) plus
-    the accumulated covered parquet.  The ISLAND MERGE is bounded the
-    same way by DOC range (covered can approach the full occurrence
-    volume on boilerplate-heavy corpora — measured at sf100, BASELINE
-    round 12 — and docs partition independently, so per-range spans
-    union identically).  The price is ``passes`` corpus scans +
-    window explodes: the classic external-memory trade (scan passes
-    for footprint).
+    Peak footprint: each pass is its OWN JOB staged through
+    ``sources.io.multipass_parquet`` (per-invocation scratch, shuffle
+    files released between passes), so peak disk ≈ one range's
+    shuffle (~1/passes of the total) plus the accumulated covered
+    parquet.  The ISLAND MERGE is bounded the same way by DOC range
+    (covered can approach the full occurrence volume on
+    boilerplate-heavy corpora — measured at sf100, BASELINE round 12 —
+    and docs partition independently, so per-range spans union
+    identically); covered is deleted once the spans are written.  The
+    price is ``passes`` corpus scans + window explodes: the classic
+    external-memory trade (scan passes for footprint).
     Composite hashed keys are mandatory here (the range hash IS the
     shuffle key's first half); collision bound as in the single-pass
     docstring.
 
-    ``passes="auto"`` derives the pass count byte-rationally from the
-    corpus and a disk budget (``disk_budget_bytes`` argument, else the
-    ``SPARK_GRAFT_DISK_BUDGET`` environment variable, in bytes) via
-    ``derive_dup_span_passes`` — the measured-constant model from the
-    completed sf100 run.  No silent default budget: guessing the disk
-    wrong defeats the entire point of the bounded form, so "auto"
-    without a budget raises ``ValueError``."""
-    import os
+    Disk-budget contract (shared with j9d): ``passes="auto"`` derives
+    the pass count byte-rationally from the corpus and a disk budget
+    (``disk_budget_bytes`` argument, else the SPARK_GRAFT_DISK_BUDGET
+    environment variable, in bytes) via ``derive_dup_span_passes`` —
+    the measured-constant model from the completed sf100 run.  No
+    silent default budget: guessing the disk wrong defeats the entire
+    point of the bounded form, so "auto" without a budget raises
+    ``ValueError``."""
     import shutil
 
-    from ma_anonymization_etl_spark.sources.io import scratch_dir
-
     if passes == "auto":
-        budget = disk_budget_bytes
-        if budget is None:
-            env = os.environ.get("SPARK_GRAFT_DISK_BUDGET")
-            budget = int(env) if env else None
+        budget = disk_budget(disk_budget_bytes)
         if budget is None:
             raise ValueError(
                 'passes="auto" needs disk_budget_bytes or the '
@@ -2886,55 +2869,32 @@ def maximal_dup_spans_chars_multipass(
             docs, cgram=cgram, min_span=min_span,
             id_col=id_col, text_col=text_col,
         )
-    from pyspark.sql import Window
-
     spark = docs.sparkSession
-    out = scratch or os.path.join(
-        scratch_dir(spark, "j56_multipass"), "covered"
+    covered, covered_dir = multipass_parquet(
+        spark,
+        "j56_covered",
+        passes,
+        lambda p: _window_covered(
+            _char_occ(docs, cgram, id_col, text_col, hashed=True).filter(
+                F.pmod(F.col("g1"), F.lit(passes)) == p
+            ),
+            ["g1", "g2"],
+        ),
     )
-    shutil.rmtree(out, ignore_errors=True)
-    for p in range(passes):
-        occ_p = (
-            _char_occ(docs, cgram, id_col, text_col)
-            .select(
-                "doc_id",
-                "n_chars",
-                "pos",
-                F.xxhash64("gr").alias("g1"),
-                (F.crc32("gr") - F.lit(2**31)).cast("int").alias("g2"),
-            )
-            .filter(F.pmod(F.col("g1"), F.lit(passes)) == p)
+    try:
+        spans, _ = multipass_parquet(
+            spark,
+            "j56_spans",
+            passes,
+            lambda p: _spans_from_covered(
+                covered.filter(F.pmod(F.col("doc_id"), F.lit(passes)) == p),
+                cgram,
+                min_span,
+            ),
         )
-        covered_p = (
-            occ_p.withColumn(
-                "cnt", F.count(F.lit(1)).over(Window.partitionBy("g1", "g2"))
-            )
-            .filter(F.col("cnt") >= 2)
-            .select("doc_id", "n_chars", "pos")
-        )
-        covered_p.write.mode("append").parquet(out)
-        # Release this pass's shuffle files before the next pass maps:
-        # the ContextCleaner drops shuffles whose dependencies are
-        # unreachable, and the JVM only notices promptly under a GC.
-        spark._jvm.System.gc()
-    # The island merge is footprint-bounded the same way, by DOC
-    # range: on a boilerplate-heavy corpus covered ≈ most positions
-    # (the sf100 probe measured 36 GB of covered parquet — the
-    # doc-keyed island shuffle was the second disk wall, BASELINE
-    # round 12), and docs partition independently across ranges, so
-    # the per-range span union is trivially identical.
-    covered = spark.read.parquet(out)
-    spans_out = os.path.join(os.path.dirname(out), "spans")
-    shutil.rmtree(spans_out, ignore_errors=True)
-    for p in range(passes):
-        sp = _spans_from_covered(
-            covered.filter(F.pmod(F.col("doc_id"), F.lit(passes)) == p),
-            cgram,
-            min_span,
-        )
-        sp.write.mode("append").parquet(spans_out)
-        spark._jvm.System.gc()
-    return spark.read.parquet(spans_out)
+    finally:
+        shutil.rmtree(covered_dir, ignore_errors=True)
+    return spans
 
 
 # j56b's planted corpus: char-level twins sharing the doc's first 100
@@ -4978,11 +4938,15 @@ def set_similarity_join(
     assume_distinct: bool = False,
     prebuilt: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
-    """EXACT Jaccard set-similarity self-join via PREFIX FILTERING
+    """Jaccard set-similarity self-join via PREFIX FILTERING
     (AllPairs/PPJoin family — Bayardo et al., WWW'07; Xiao et al.,
-    WWW'08): all pairs with J(A,B) >= tau, no false negatives, no
-    hashing error.  j3's MinHash-LSH trades a recall tail for speed;
-    this is the path for dedup contracts that must be exact.
+    WWW'08): all pairs with J(A,B) >= tau, no false negatives from
+    candidate generation.  The verify compares xxhash64 token arrays,
+    so an intersection count is wrong only if two distinct tokens of
+    A ∪ B collide in 64 bits — the C(|A∪B|, 2)·2⁻⁶⁴ per-pair bound
+    written at ``_hashed_token_arrays`` (~3e-16 at this family's
+    shapes).  j3's MinHash-LSH trades a recall tail for speed; this is
+    the path for dedup contracts that need that written bound.
 
     ``toks`` is an exploded (id, token) table; duplicates are removed.
     Returns (a_id, b_id, jaccard ROUND 6) with a_id < b_id.
@@ -5629,8 +5593,10 @@ def containment_join(
     positional: bool = True,
     df_cap: int | None = None,
 ) -> DataFrame:
-    """EXACT directed CONTAINMENT self-join: ordered pairs (A, B),
-    A ≠ B, with |A∩B| / |A| >= c — "A is (nearly) contained in B".
+    """Directed CONTAINMENT self-join: ordered pairs (A, B), A ≠ B,
+    with |A∩B| / |A| >= c — "A is (nearly) contained in B" — up to the
+    C(|A∪B|, 2)·2⁻⁶⁴ per-pair hashed-verify bound written at
+    ``_hashed_token_arrays``.
     Jaccard (j50) misses asymmetric duplication by construction: a
     paragraph quoted inside a 100× longer page has Jaccard ≈ 0.01 but
     containment 1.0; quote/boilerplate/subset detection needs this
@@ -5837,6 +5803,29 @@ def bm25_topk(
     return topk.withColumn("rank", F.row_number().over(w))
 
 
+def _idf6_table(qtoks: DataFrame, st: DataFrame, *stats: str) -> DataFrame:
+    """Per-query-term BM25 IDF, ln((N − df + ½)/(df + ½) + 1), quantized
+    once to integer micro-nats (``idf6``) — the one implementation-defined
+    float op of the j54 family (see ``bm25_topk``).  ``qtoks`` is the
+    (doc_id, tok) query-term occurrences; ``st`` is the 1-row corpus
+    stats table (``n`` plus the ``stats`` columns carried alongside)."""
+    dfq = qtoks.select("doc_id", "tok").distinct().groupBy("tok").agg(
+        F.count(F.lit(1)).alias("df")
+    )
+    return dfq.crossJoin(F.broadcast(st)).select(
+        "tok",
+        F.round(
+            F.log(
+                (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
+            )
+            * 1000000
+        )
+        .cast("long")
+        .alias("idf6"),
+        *stats,
+    )
+
+
 def bm25_scores(
     docs: DataFrame,
     query_terms: list[str] | None = None,
@@ -5857,29 +5846,9 @@ def bm25_scores(
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
     if query_terms is None:
-        cnt = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
-        query_terms = [
-            r["tok"]
-            for r in cnt.orderBy(F.col("cnt").desc(), F.col("tok").asc())
-            .limit(5)
-            .collect()
-        ]
+        query_terms = top_terms(docs, 5)
     qtoks = toks.filter(F.col("tok").isin(list(query_terms)))
-    dfq = qtoks.select("doc_id", "tok").distinct().groupBy("tok").agg(
-        F.count(F.lit(1)).alias("df")
-    )
-    idf = dfq.crossJoin(F.broadcast(st)).select(
-        "tok",
-        F.round(
-            F.log(
-                (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-            )
-            * 1000000
-        )
-        .cast("long")
-        .alias("idf6"),
-        "avgdl",
-    )
+    idf = _idf6_table(qtoks, st, "avgdl")
     tf = qtoks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     sat = (F.col("tf") * F.lit(k1 + 1.0)) / (
         F.col("tf")
@@ -5991,21 +5960,7 @@ def bm25_multi_topk(
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
     qtoks = toks.filter(F.col("tok").isin(all_terms))
-    dfq = qtoks.select("doc_id", "tok").distinct().groupBy("tok").agg(
-        F.count(F.lit(1)).alias("df")
-    )
-    idf = dfq.crossJoin(F.broadcast(st)).select(
-        "tok",
-        F.round(
-            F.log(
-                (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-            )
-            * 1000000
-        )
-        .cast("long")
-        .alias("idf6"),
-        "avgdl",
-    )
+    idf = _idf6_table(qtoks, st, "avgdl")
     tf = qtoks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     sat = (F.col("tf") * F.lit(k1 + 1.0)) / (
         F.col("tf")
@@ -6152,22 +6107,7 @@ def bm25f_topk(
     if query_terms is None:
         query_terms = top_terms(docs, 5)
     qtoks = toks.filter(F.col("tok").isin(list(query_terms)))
-    dfq = qtoks.select("doc_id", "tok").distinct().groupBy("tok").agg(
-        F.count(F.lit(1)).alias("df")
-    )
-    idf = dfq.crossJoin(F.broadcast(st)).select(
-        "tok",
-        F.round(
-            F.log(
-                (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-            )
-            * 1000000
-        )
-        .cast("long")
-        .alias("idf6"),
-        "avgdlt",
-        "avgdlb",
-    )
+    idf = _idf6_table(qtoks, st, "avgdlt", "avgdlb")
     tf = qtoks.groupBy("doc_id", "tok").agg(
         F.sum(F.when(F.col("pos0") < title_len, 1).otherwise(0)).alias("tft"),
         F.sum(F.when(F.col("pos0") >= title_len, 1).otherwise(0)).alias("tfb"),

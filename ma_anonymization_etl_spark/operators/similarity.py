@@ -18,7 +18,12 @@ from pyspark.sql import functions as F
 from ma_anonymization_etl_spark.functions.vectors import as_double, cosine, dot, norm
 from ma_anonymization_etl_spark.operators.session_cache import cache_put, register_cache
 from ma_anonymization_etl_spark.registry import register
-from ma_anonymization_etl_spark.sources.io import load
+from ma_anonymization_etl_spark.sources.io import (
+    disk_budget,
+    load,
+    multipass_parquet,
+    passes_for_budget,
+)
 
 # DuckDB-side cosine with identical double accumulation order.
 _SQL_E = "embedding::DOUBLE[]"
@@ -29,6 +34,19 @@ def _sql_cos(a: str, b: str) -> str:
         f"list_dot_product({a}, {b}) / "
         f"(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
     )
+
+
+_LSH_DIM = 64  # embedding dim
+# Fixed plane seeds (j17 buckets, j9b/j9d banding, j57/j64 cells), so
+# Spark and the SQL oracles see identical constants.
+_LSH_SEED, _J9B_SEED, _J57_SEED = 42, 43, 47
+
+
+def seeded_planes(seed: int, n: int) -> list[list[float]]:
+    """``n`` random hyperplanes, ``_LSH_DIM`` N(0,1) components rounded
+    to 6 decimals; sequential, so a prefix of a longer draw is equal."""
+    rng = random.Random(seed)
+    return [[round(rng.gauss(0, 1), 6) for _ in range(_LSH_DIM)] for _ in range(n)]
 
 
 @register(
@@ -192,14 +210,6 @@ def lsh_band_plan(
     return bands, bits
 
 
-def _j9b_planes(bands: int, bits: int) -> list[list[float]]:
-    rng = random.Random(43)
-    return [
-        [round(rng.gauss(0, 1), 6) for _ in range(_LSH_DIM)]
-        for _ in range(bands * bits)
-    ]
-
-
 # j9b's persisted (corpus, signature) subtree, keyed by
 # (applicationId, sf_dir) like _J3_SHINGLE_CACHE: the signature table
 # feeds BOTH sides of the band self-join plus two verify lookups, and
@@ -324,7 +334,7 @@ def _j9b_corpus_cand(
         n_corpus = 2 * e.count()
         n_bands, n_bits = lsh_band_plan(n_corpus)
         bplanes = spark.sparkContext.broadcast(
-            np.array(_j9b_planes(n_bands, n_bits), dtype=np.float64)  # (bands*bits, 64)
+            np.array(seeded_planes(_J9B_SEED, n_bands * n_bits), dtype=np.float64)  # (bands*bits, 64)
         )
 
         def signatures(batches):
@@ -419,6 +429,18 @@ def pair_verify_f32_screen(
     return _f32_boundary_release(screened, corpus, tau)
 
 
+def _pair_cos(pdf):
+    """Float64 numpy cosine of each Arrow-batch row's (va, vb) pair —
+    the one arithmetic both halves of the f32 verify share."""
+    import numpy as np
+
+    a = np.stack(pdf["va"].to_numpy()).astype(np.float64)
+    b = np.stack(pdf["vb"].to_numpy()).astype(np.float64)
+    return np.einsum("ij,ij->i", a, b) / (
+        np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)
+    )
+
+
 def _f32_screen(
     cand: DataFrame,
     corpus: DataFrame,
@@ -446,11 +468,7 @@ def _f32_screen(
         for pdf in batches:
             if not len(pdf):
                 continue
-            a = np.stack(pdf["va"].to_numpy()).astype(np.float64)
-            b = np.stack(pdf["vb"].to_numpy()).astype(np.float64)
-            cos = np.einsum("ij,ij->i", a, b) / (
-                np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)
-            )
+            cos = _pair_cos(pdf)
             sure = cos >= tau + eps
             boundary = np.abs(cos - tau) <= eps
             keep = sure | boundary
@@ -467,18 +485,11 @@ def _f32_boundary_release(
     """The release half of ``pair_verify_f32_screen``: sure pairs union
     the float64 re-adjudication of the (~empty by construction)
     boundary set."""
-    import numpy as np
 
     def verify64(batches):
         for pdf in batches:
-            if not len(pdf):
-                continue
-            a = np.stack(pdf["va"].to_numpy()).astype(np.float64)
-            b = np.stack(pdf["vb"].to_numpy()).astype(np.float64)
-            cos = np.einsum("ij,ij->i", a, b) / (
-                np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)
-            )
-            yield pdf.loc[cos >= tau, ["a_id", "b_id"]]
+            if len(pdf):
+                yield pdf.loc[_pair_cos(pdf) >= tau, ["a_id", "b_id"]]
 
     # The float64 lookups carry NO broadcast hint: the boundary pair
     # set is ~empty by construction, so AQE broadcasts THAT side —
@@ -499,13 +510,31 @@ def _f32_boundary_release(
     )
 
 
+# The _J56D_OCC_SHUF_B discipline for the above-cutover verify,
+# MEASURED: the shuffled single-pass screen (broadcast joins off) over
+# sf0.1's 4,000-vector derived corpus wrote 5,522,460 shuffle bytes for
+# 48,767 candidates (event log, local[4] on a 4-core 15 GB host) =
+# 113.2 B each, rounded up.
+# 19 % of it is the corpus-side f32 exchange, so at scale the figure
+# overstates — the safe direction for a disk bound.
+_J9D_CAND_SHUF_B = 114  # lz4-compressed shuffle bytes per candidate row
+
+
+def derive_verify_passes(n_cand: int, disk_budget_bytes: int | None) -> int:
+    """The multipass verify's pass count: 1 without a disk budget, else
+    ``sources.io.passes_for_budget`` over the candidates' measured
+    shuffle bytes (no floor: the survivor parquet is ~the release)."""
+    if disk_budget_bytes is None:
+        return 1
+    return passes_for_budget(n_cand * _J9D_CAND_SHUF_B, disk_budget_bytes)
+
+
 def pair_verify_f32_screen_multipass(
     cand: DataFrame,
     corpus: DataFrame,
     tau: float,
-    passes: int,
+    passes: int | str = "auto",
     eps: float = 1e-4,
-    scratch: str | None = None,
 ) -> DataFrame:
     """``pair_verify_f32_screen`` above the broadcast cutover with
     BOUNDED PEAK SHUFFLE FOOTPRINT — the j56d key-space-partition
@@ -518,15 +547,15 @@ def pair_verify_f32_screen_multipass(
 
     The candidate PAIR space is hash-partitioned into ``passes``
     ranges (pmod(xxhash64(a_id, b_id), passes)); each pass joins only
-    its range against the f32 lookups and appends its screen survivors
-    to session-scoped parquet, with a ContextCleaner nudge releasing
-    the pass's shuffle files before the next pass maps.  Peak disk ≈
-    one range's candidate join (~1/passes of the single-pass shuffle)
-    plus the corpus-side f32 exchange per pass plus the accumulated
-    survivor parquet (survivors ≈ released pairs — tiny by the
-    corpus-gap construction).  Price: the f32 lookup tables are
-    re-shuffled per pass (the external-memory scan-passes-for-
-    footprint trade, exactly j56d's).
+    its range against the f32 lookups and its screen survivors stage
+    through ``sources.io.multipass_parquet`` (per-invocation scratch,
+    shuffle files released between passes).  Peak disk ≈ one range's
+    candidate join (~1/passes of the single-pass shuffle) plus the
+    corpus-side f32 exchange per pass plus the accumulated survivor
+    parquet (survivors ≈ released pairs — tiny by the corpus-gap
+    construction).  Price: the f32 lookup tables are re-shuffled per
+    pass (the external-memory scan-passes-for-footprint trade, exactly
+    j56d's).
 
     BIT-IDENTICAL to the single-pass release by construction: the
     ranges PARTITION pairs, each pair is screened in exactly one pass
@@ -535,43 +564,44 @@ def pair_verify_f32_screen_multipass(
     property-pinned against both single-pass forms in
     tests/test_new_ops_props.py.
 
-    The candidate table is eagerly localCheckpointed once so the
-    banding lineage is not re-run per pass — DISK_ONLY (serialized,
-    the _copurchase_edges discipline): at above-cutover scale the pair
-    list is the largest bounded object here, and the first probe run
-    measured the default deserialized storage OOM-ing the heap while
-    every pass streams it exactly once anyway."""
-    import os
-    import shutil
+    Disk-budget contract (shared with j56d): ``passes="auto"`` takes
+    the budget from SPARK_GRAFT_DISK_BUDGET (bytes) and derives the
+    passes from the candidate count (``derive_verify_passes``); with
+    no budget it runs single-pass.  An int pins the pass count.
 
+    The candidate table is eagerly localCheckpointed once so the
+    banding lineage is not re-run per pass (nor by the candidate
+    count) — DISK_ONLY (serialized, the _copurchase_edges discipline):
+    at above-cutover scale the pair list is the largest bounded object
+    here, and the first probe run measured the default deserialized
+    storage OOM-ing the heap while every pass streams it exactly once
+    anyway."""
     from pyspark import StorageLevel
 
-    from ma_anonymization_etl_spark.sources.io import scratch_dir
-
+    auto = passes == "auto"
+    budget = disk_budget() if auto else None
+    if (auto and budget is None) or (not auto and passes < 2):
+        return pair_verify_f32_screen(
+            cand, corpus, tau, broadcast_lookups=False, eps=eps
+        )
+    cand = cand.localCheckpoint(
+        eager=True, storageLevel=StorageLevel.DISK_ONLY
+    )
+    if auto:
+        passes = derive_verify_passes(cand.count(), budget)
     if passes < 2:
         return pair_verify_f32_screen(
             cand, corpus, tau, broadcast_lookups=False, eps=eps
         )
-    spark = cand.sparkSession
-    out = scratch or os.path.join(
-        scratch_dir(spark, "pair_verify_multipass"), "screened"
+    screened, _ = multipass_parquet(
+        cand.sparkSession,
+        "pair_verify_multipass",
+        passes,
+        lambda p: _f32_screen(
+            cand.filter(F.pmod(F.xxhash64("a_id", "b_id"), F.lit(passes)) == p),
+            corpus, tau, broadcast_lookups=False, eps=eps,
+        ),
     )
-    shutil.rmtree(out, ignore_errors=True)
-    cand = cand.localCheckpoint(
-        eager=True, storageLevel=StorageLevel.DISK_ONLY
-    )
-    for p in range(passes):
-        cand_p = cand.filter(
-            F.pmod(F.xxhash64("a_id", "b_id"), F.lit(passes)) == p
-        )
-        _f32_screen(
-            cand_p, corpus, tau, broadcast_lookups=False, eps=eps
-        ).write.mode("append").parquet(out)
-        # Release this pass's shuffle files before the next pass maps
-        # (the j56d discipline): the ContextCleaner drops unreachable
-        # shuffles, and the JVM only notices promptly under a GC.
-        spark._jvm.System.gc()
-    screened = spark.read.parquet(out)
     return _f32_boundary_release(screened, corpus, tau)
 
 
@@ -627,18 +657,12 @@ def j9d_sim_pair_lsh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # Above the broadcast cutover the shuffled form's disk footprint is
     # the wall (round-11 sf100: ~60 GB written before death).  The
-    # bounded multipass form engages under an EXPLICIT pass count —
-    # the j56d no-silent-default discipline: guessing a disk budget
-    # wrong defeats the bound, so without the env the honest shuffled
-    # single-pass runs (passes=1).  Gate SFs sit far below the cutover
-    # and never reach this branch; bit-identity of every branch is
-    # property-pinned.
-    import os
-
-    passes = int(os.environ.get("SPARK_GRAFT_VERIFY_PASSES", "1"))
-    return pair_verify_f32_screen_multipass(
-        cand, corpus, _J9B_TAU, passes=passes
-    )
+    # bounded multipass form derives its passes from the deployment's
+    # disk budget (SPARK_GRAFT_DISK_BUDGET, the setting j56d reads);
+    # without one the shuffled single-pass runs.  Gate SFs sit far
+    # below the cutover and never reach this branch; bit-identity of
+    # every branch is property-pinned.
+    return pair_verify_f32_screen_multipass(cand, corpus, _J9B_TAU)
 
 
 @register(
@@ -1256,14 +1280,6 @@ _J57_MAX_BITS = 20
 _J57_MIN_BITS = 4
 
 
-def _j57_planes() -> list[list[float]]:
-    rng = random.Random(47)  # fixed seed → identical constants in Spark & SQL
-    return [
-        [round(rng.gauss(0, 1), 6) for _ in range(64)]  # embedding dim
-        for _ in range(_J57_MAX_BITS)
-    ]
-
-
 def multiprobe_cell_bits(n_vectors: int) -> int:
     """bits = ceil(log2(ceil(sqrt(N)))) clamped to [4, 20] — 2^bits
     cells ≈ sqrt(N), INTEGER arithmetic throughout (isqrt + bit_length,
@@ -1304,7 +1320,7 @@ def _mp_sign(e: DataFrame, bits: int) -> DataFrame:
     """The multiprobe index content: every (vec_id, v) signed into its
     ``bits``-bit random-hyperplane cell — the input columns plus
     ``cell`` (extra columns like a label ride through untouched)."""
-    planes = _j57_planes()[:bits]
+    planes = seeded_planes(_J57_SEED, bits)
     bit_cols = [
         F.when(dot(F.col("v"), F.expr(sql_lit_f64_array(p))) > 0, 1).otherwise(0)
         for p in planes
@@ -1408,7 +1424,7 @@ def _j57_oracle(lo: int = 0, hi: int = 10) -> str:
     exact top-3 among Hamming<=1 candidates — the multi-probe cell-join
     release re-expressed as the equivalent Hamming filter (affordable
     exhaustively at gate SF; the ENGINE must never join that way)."""
-    planes = _j57_planes()
+    planes = seeded_planes(_J57_SEED, _J57_MAX_BITS)
     sig_terms = ", ".join(
         f"CASE WHEN list_dot_product(v, {p}::DOUBLE[]) > 0 THEN 1 ELSE 0 END"
         for p in planes
@@ -1828,18 +1844,10 @@ def j33_sq8_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- LSH signatures: the approximate scale path --------------------------
 
 _LSH_PLANES = 8
-_LSH_DIM = 64
-
-
-def _hyperplanes() -> list[list[float]]:
-    rng = random.Random(42)  # fixed seed → identical constants in Spark & SQL
-    return [
-        [round(rng.gauss(0, 1), 6) for _ in range(_LSH_DIM)] for _ in range(_LSH_PLANES)
-    ]
 
 
 def _lsh_oracle() -> str:
-    planes = _hyperplanes()
+    planes = seeded_planes(_LSH_SEED, _LSH_PLANES)
     bits = ",\n       ".join(
         f"CASE WHEN list_dot_product({_SQL_E}, {p}::DOUBLE[]) > 0 THEN '1' ELSE '0' END"
         for p in planes
@@ -1858,7 +1866,7 @@ def j17_sim_lsh_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     within buckets replaces the quadratic pair join.  Oracle carries
     the identical hyperplane constants."""
     e = load(spark, sf_dir, "embeddings")
-    planes = _hyperplanes()
+    planes = seeded_planes(_LSH_SEED, _LSH_PLANES)
     v = as_double(F.col("embedding"))
     bits = [
         F.when(dot(v, F.expr(sql_lit_f64_array(p))) > 0, "1").otherwise("0")
@@ -2567,7 +2575,7 @@ def _j64_oracle(lo: int = 0, hi: int = 20) -> str:
     """j64's referee: j57's plane/bit replay + j10's vote semantics —
     5-NN among Hamming<=1 candidates, majority label, ties to the
     smaller label, exhaustively recomputed."""
-    planes = _j57_planes()
+    planes = seeded_planes(_J57_SEED, _J57_MAX_BITS)
     sig_terms = ", ".join(
         f"CASE WHEN list_dot_product(v, {p}::DOUBLE[]) > 0 THEN 1 ELSE 0 END"
         for p in planes

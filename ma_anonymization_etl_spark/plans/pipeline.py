@@ -49,14 +49,6 @@ def _step_mask_partial(df, col, keep_last=4, mask_char="*", out=None):
     return df.withColumn(out or col, A.mask_partial(col, keep_last, mask_char))
 
 
-def _step_suppress_columns(df, cols):
-    return A.suppress_columns(df, cols)
-
-
-def _step_null_columns(df, cols):
-    return A.null_columns(df, cols)
-
-
 def _step_suppress_rows_if(df, pred):
     return A.suppress_rows_if(df, F.expr(pred))
 
@@ -77,28 +69,12 @@ def _step_generalize_date(df, col, unit="month", out=None):
     return df.withColumn(out or col, A.generalize_date(col, unit))
 
 
-def _step_top_bottom_code(df, col, p_lo=0.05, p_hi=0.95, out=None):
-    return A.top_bottom_code(df, col, p_lo, p_hi, out)
-
-
 def _step_perturb_uniform(df, col, scale, seed, out=None):
     return df.withColumn(out or col, A.perturb_uniform(col, scale, seed))
 
 
 def _step_perturb_laplace(df, col, epsilon, sensitivity, seed, out=None):
     return df.withColumn(out or col, A.perturb_laplace(col, epsilon, sensitivity, seed))
-
-
-def _step_swap_within_group(df, col, group_cols, seed):
-    return A.swap_within_group(df, col, group_cols, seed)
-
-
-def _step_k_enforce_suppress(df, qis, k):
-    return A.k_enforce_suppress(df, qis, k)
-
-
-def _step_l_diversity_enforce(df, qis, sa, l):
-    return A.l_diversity_enforce(df, qis, sa, l)
 
 
 def _step_select(df, cols):
@@ -115,18 +91,6 @@ def _step_dp_sum_clipped(df, group, col, lo, hi, epsilon, salt=""):
     from ma_anonymization_etl_spark.operators.dp import dp_sum_clipped
 
     return dp_sum_clipped(df, group, col, lo, hi, epsilon, salt)
-
-
-def _step_mondrian_kanon(df, qis, k, max_depth=16):
-    return A.mondrian_kanon(df, qis, k, max_depth)
-
-
-def _step_cell_suppression(df, qis, threshold=5):
-    return A.cell_suppression_release(df, qis, threshold)
-
-
-def _step_microaggregate(df, cls, col, tiebreak, k=10, out=None):
-    return A.microaggregate(df, cls, col, tiebreak, k, out)
 
 
 # --- Curation steps (j/q families as route ops) ---------------------------
@@ -480,28 +444,28 @@ STEPS = {
     "pseudonymize_sha2": _step_pseudonymize_sha2,
     "pseudonymize_md5": _step_pseudonymize_md5,
     "mask_partial": _step_mask_partial,
-    "suppress_columns": _step_suppress_columns,
-    "null_columns": _step_null_columns,
+    "suppress_columns": A.suppress_columns,
+    "null_columns": A.null_columns,
     "suppress_rows_if": _step_suppress_rows_if,
     "suppress_cell_if": _step_suppress_cell_if,
     "generalize_numeric": _step_generalize_numeric,
     "generalize_range_label": _step_generalize_range_label,
     "generalize_date": _step_generalize_date,
-    "top_bottom_code": _step_top_bottom_code,
+    "top_bottom_code": A.top_bottom_code,
     "perturb_uniform": _step_perturb_uniform,
     "perturb_laplace": _step_perturb_laplace,
-    "swap_within_group": _step_swap_within_group,
-    "k_enforce_suppress": _step_k_enforce_suppress,
-    "l_diversity_enforce": _step_l_diversity_enforce,
+    "swap_within_group": A.swap_within_group,
+    "k_enforce_suppress": A.k_enforce_suppress,
+    "l_diversity_enforce": A.l_diversity_enforce,
     "select": _step_select,
     # Release steps: each AGGREGATES the route's working table into a
     # publishable summary (only the group key and the release metrics
     # survive), so they are terminal in any sensible route.
     "dp_count": _step_dp_count,
     "dp_sum_clipped": _step_dp_sum_clipped,
-    "mondrian_kanon": _step_mondrian_kanon,
-    "cell_suppression": _step_cell_suppression,
-    "microaggregate": _step_microaggregate,
+    "mondrian_kanon": A.mondrian_kanon,
+    "cell_suppression": A.cell_suppression_release,
+    "microaggregate": A.microaggregate,
     # Curation steps (the j/q families as route ops) — delegating to
     # operators.llm / operators.quality library functions.
     "dedup_exact": _step_dedup_exact,

@@ -65,6 +65,78 @@ def scratch_dir(spark: SparkSession, *parts: str) -> str:
     return d
 
 
+# Bounded-disk multipass staging: the one pass-count formula and pass
+# loop behind j56d's ExactSubstr spans and j9d's above-cutover verify.
+MAX_PASSES = 64  # past this, scan-pass cost dominates any footprint win
+
+
+def disk_budget(explicit: int | None = None) -> int | None:
+    """Local-disk budget in bytes: ``explicit``, else the
+    ``SPARK_GRAFT_DISK_BUDGET`` environment variable, else None."""
+    import os
+
+    if explicit is not None:
+        return explicit
+    env = os.environ.get("SPARK_GRAFT_DISK_BUDGET")
+    return int(env) if env else None
+
+
+def passes_for_budget(
+    shuffle_bytes: int, budget_bytes: int, floor_bytes: int = 0
+) -> int:
+    """Smallest pass count P with shuffle_bytes / P + floor_bytes <=
+    budget_bytes, clamped to [1, MAX_PASSES]: ``shuffle_bytes`` is the
+    single-pass shuffle a key-space partition splits P ways,
+    ``floor_bytes`` the staged output no P reduces.  A budget at or
+    below the floor raises ``ValueError`` — no pass count fits, and a
+    silent attempt would die mid-run."""
+    import math
+
+    headroom = budget_bytes - floor_bytes
+    if headroom <= 0:
+        raise ValueError(
+            f"disk budget {budget_bytes} B is at or below the irreducible "
+            f"floor ~{floor_bytes} B; no pass count fits — raise the "
+            "budget or shrink the input"
+        )
+    return max(1, min(math.ceil(shuffle_bytes / headroom), MAX_PASSES))
+
+
+def multipass_parquet(
+    spark: SparkSession, name: str, passes: int, build_pass
+) -> tuple[DataFrame, str]:
+    """Append ``build_pass(p)`` for p in range(passes) to one parquet
+    table, each pass its own job; return (the table read back, its
+    directory), which lives until the caller deletes it or the
+    application's scratch root is swept.
+
+    - The directory is unique per invocation, so a later call never
+      touches an earlier call's still-lazily-read output.
+    - After each pass one JVM GC lets the ContextCleaner drop the
+      pass's unreachable shuffle files before the next pass maps —
+      what bounds peak disk to about one pass's shuffle.
+    - Each pass refreshes the application scratch root's mtime, so
+      another session's stale-root sweep (``scratch_dir``) cannot
+      delete a run that outlives the one-hour grace.
+    - A pass that raises (or is interrupted) removes the partial
+      output before the exception propagates."""
+    import os
+    import shutil
+    import uuid
+
+    out = scratch_dir(spark, name, uuid.uuid4().hex)
+    app_root = scratch_dir(spark)
+    try:
+        for p in range(passes):
+            os.utime(app_root)
+            build_pass(p).write.mode("append").parquet(out)
+            spark._jvm.System.gc()
+        return spark.read.parquet(out), out
+    except BaseException:
+        shutil.rmtree(out, ignore_errors=True)
+        raise
+
+
 def stage_key(sf_dir: str) -> str:
     """Collision-resistant conf-key suffix for a staged sf_dir: the
     readable sanitized path plus an 8-hex digest of the raw string

@@ -144,7 +144,7 @@ def test_j9b_lsh_prunes_and_recovers_all_pairs(spark):
     import numpy as np
 
     n_bands, n_bits = S.lsh_band_plan(n)
-    planes = np.array(S._j9b_planes(n_bands, n_bits))
+    planes = np.array(S.seeded_planes(S._J9B_SEED, n_bands * n_bits))
     rows = corpus.collect()
     ids = np.array([r["vec_id"] for r in rows])
     m = np.stack([np.array(r["v"]) for r in rows])

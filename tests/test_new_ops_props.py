@@ -2076,10 +2076,11 @@ def test_j57_multiprobe_reference_and_derivation(spark):
 
     from ma_anonymization_etl_spark.functions.vectors import as_double
     from ma_anonymization_etl_spark.operators.similarity import (
-        _j57_planes,
+        _J57_SEED,
         exact_topk,
         multiprobe_ann_topk,
         multiprobe_cell_bits,
+        seeded_planes,
     )
     from ma_anonymization_etl_spark.sources.io import load
 
@@ -2093,7 +2094,7 @@ def test_j57_multiprobe_reference_and_derivation(spark):
 
     ids = np.array([r.vec_id for r in rows])
     V = np.array([r.v for r in rows])
-    P = np.array(_j57_planes()[:bits])
+    P = np.array(seeded_planes(_J57_SEED, bits))
     S = (V @ P.T > 0).astype(int)  # (n, bits) signatures
     Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
 
@@ -2590,6 +2591,153 @@ def test_j9d_multipass_verify_release_identical(spark):
             ).collect()
         }
         assert got == base, f"passes={passes}: multipass drifted"
+
+
+def test_multipass_interleaved_invocations_keep_their_output(spark):
+    """Two multipass invocations in one session must not share staging:
+    the first call's lazily-read result is collected only AFTER a
+    second call ran, and each must still equal its single-pass release
+    — for both the j56d span engine and the j9d pair verify."""
+    import random
+
+    from ma_anonymization_etl_spark.operators.llm import (
+        maximal_dup_spans_chars,
+        maximal_dup_spans_chars_multipass,
+    )
+    from ma_anonymization_etl_spark.operators.similarity import (
+        _J9B_TAU,
+        _j9b_corpus_cand,
+        pair_verify_f32_screen,
+        pair_verify_f32_screen_multipass,
+    )
+
+    rng = random.Random(71)
+    letters = "abcdefghijklmnopqrstuvwxyz "
+    rnd = lambda n: "".join(rng.choice(letters) for _ in range(n))  # noqa: E731
+    blk = rnd(60)
+    d1 = spark.createDataFrame(
+        [(i, rnd(40) + blk + rnd(30)) for i in range(6)], "doc_id long, text string"
+    )
+    d2 = spark.createDataFrame(
+        [(i, rnd(30) + (blk if i % 2 else rnd(60))) for i in range(8)],
+        "doc_id long, text string",
+    )
+
+    def spans(df):
+        return sorted(
+            (r.doc_id, r.span_start, r.span_len, r.n_grams_in_span)
+            for r in df.collect()
+        )
+
+    first = maximal_dup_spans_chars_multipass(d1, cgram=20, min_span=30, passes=2)
+    second = maximal_dup_spans_chars_multipass(d2, cgram=20, min_span=30, passes=3)
+    base1 = spans(maximal_dup_spans_chars(d1, cgram=20, min_span=30))
+    base2 = spans(maximal_dup_spans_chars(d2, cgram=20, min_span=30))
+    assert base1 and base2 and base1 != base2
+    assert spans(first) == base1
+    assert spans(second) == base2
+
+    corpus, cand, _ = _j9b_corpus_cand(spark, SF_SMOKE)
+    cand2 = cand.filter(F.col("a_id") % 2 == 0)
+
+    def pairs(df):
+        return {(r.a_id, r.b_id) for r in df.collect()}
+
+    first = pair_verify_f32_screen_multipass(cand, corpus, _J9B_TAU, passes=2)
+    second = pair_verify_f32_screen_multipass(cand2, corpus, _J9B_TAU, passes=3)
+    base1 = pairs(pair_verify_f32_screen(cand, corpus, _J9B_TAU, broadcast_lookups=True))
+    base2 = pairs(pair_verify_f32_screen(cand2, corpus, _J9B_TAU, broadcast_lookups=True))
+    assert base1 and base1 != base2
+    assert pairs(first) == base1
+    assert pairs(second) == base2
+
+
+def test_multipass_parquet_failed_pass_cleans_up_and_refreshes_root(spark):
+    """A pass that raises must leave no staging directory behind, and
+    every pass refreshes the application's scratch-root mtime so a
+    concurrent session's one-hour stale sweep cannot take a live run."""
+    import os
+    import time
+
+    import pytest as _pytest
+
+    from ma_anonymization_etl_spark.sources.io import multipass_parquet, scratch_dir
+
+    name = "test_failed_multipass"
+    app_root = scratch_dir(spark)
+    os.makedirs(app_root, exist_ok=True)
+    stale = time.time() - 7200
+    os.utime(app_root, (stale, stale))
+
+    def build(p):
+        df = spark.range(50)
+        if p == 0:
+            return df
+        return df.select(
+            F.when(F.col("id") >= 0, F.raise_error(F.lit("pass failed")))
+            .otherwise(F.col("id"))
+            .alias("id")
+        )
+
+    with _pytest.raises(Exception, match="pass failed"):
+        multipass_parquet(spark, name, 3, build)
+    stage_parent = scratch_dir(spark, name)
+    assert not os.path.isdir(stage_parent) or os.listdir(stage_parent) == []
+    assert os.path.getmtime(app_root) > stale + 3600
+
+    out, out_dir = multipass_parquet(spark, name, 2, lambda p: spark.range(p, 10, 2))
+    assert sorted(r.id for r in out.collect()) == list(range(10))
+    assert os.listdir(stage_parent) == [os.path.basename(out_dir)]
+
+
+def test_j9d_derived_verify_passes(spark, monkeypatch):
+    """j9d derives its multipass verify's pass count from the shared
+    disk budget (SPARK_GRAFT_DISK_BUDGET) through the same formula as
+    j56d: no budget gives one pass (the shuffled single-pass form), a
+    tight budget gives >= 2 passes with the same release."""
+    import math
+    import os
+
+    import pytest as _pytest
+
+    from ma_anonymization_etl_spark.operators.similarity import (
+        _J9B_TAU,
+        _J9D_CAND_SHUF_B,
+        _j9b_corpus_cand,
+        derive_verify_passes,
+        pair_verify_f32_screen,
+        pair_verify_f32_screen_multipass,
+    )
+    from ma_anonymization_etl_spark.sources.io import MAX_PASSES, scratch_dir
+
+    corpus, cand, _ = _j9b_corpus_cand(spark, SF_SMOKE)
+    n = cand.count()
+    tight = n * _J9D_CAND_SHUF_B // 3
+    assert derive_verify_passes(n, None) == 1
+    assert derive_verify_passes(n, 10**15) == 1
+    assert derive_verify_passes(n, tight) == math.ceil(
+        n * _J9D_CAND_SHUF_B / tight
+    ) >= 2
+    assert derive_verify_passes(n, 1) == MAX_PASSES
+    with _pytest.raises(ValueError, match="floor"):
+        derive_verify_passes(n, 0)
+
+    def pairs(df):
+        return {(r.a_id, r.b_id) for r in df.collect()}
+
+    base = pairs(pair_verify_f32_screen(cand, corpus, _J9B_TAU, broadcast_lookups=True))
+    staged = scratch_dir(spark, "pair_verify_multipass")
+
+    def n_staged():
+        return len(os.listdir(staged)) if os.path.isdir(staged) else 0
+
+    monkeypatch.delenv("SPARK_GRAFT_DISK_BUDGET", raising=False)
+    before = n_staged()
+    assert pairs(pair_verify_f32_screen_multipass(cand, corpus, _J9B_TAU)) == base
+    assert n_staged() == before  # no budget: single pass, nothing staged
+    monkeypatch.setenv("SPARK_GRAFT_DISK_BUDGET", str(tight))
+    assert pairs(pair_verify_f32_screen_multipass(cand, corpus, _J9B_TAU)) == base
+    assert n_staged() == before + 1  # derived P >= 2: the bounded path ran
 
 
 def test_j54c_bm25f_single_field_reduction_and_title_boost(spark):
